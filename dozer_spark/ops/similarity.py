@@ -14,6 +14,7 @@
 from __future__ import annotations
 
 import hashlib
+import math
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -385,8 +386,17 @@ def _arr_sql(xs: list[float]) -> str:
     """SQL array literal of DOUBLEs. repr() emits the shortest string
     that round-trips to the same IEEE-754 double, and the SQL parser's
     decimal-to-double conversion is correctly rounded — so the parsed
-    values are bit-identical to the F.lit(x) Columns this replaces."""
-    return "array(" + ", ".join(f"{float(x)!r}D" for x in xs) + ")"
+    values are bit-identical to the F.lit(x) Columns this replaces.
+    NaN and infinities have no SQL numeric literal (repr gives 'nan',
+    'inf'), so they raise instead of emitting text that cannot parse."""
+    vals = [float(x) for x in xs]
+    bad = [x for x in vals if not math.isfinite(x)]
+    if bad:
+        raise ValueError(
+            f"non-finite value {bad[0]!r} in a vector literal: NaN and "
+            "infinities have no SQL literal form"
+        )
+    return "array(" + ", ".join(f"{x!r}D" for x in vals) + ")"
 
 
 def _arr2_sql(rows: list[list[float]]) -> str:

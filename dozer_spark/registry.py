@@ -70,11 +70,17 @@ def _path_sig(path: str) -> tuple | None:
     file overwritten in place inside a nested partition subdirectory
     (key=v/part-*.parquet) changes neither the top-level entry names
     nor the subdir mtime, so a one-level signature would serve a stale
-    schema for partitioned layouts."""
+    schema for partitioned layouts. A subdirectory the walk cannot
+    list makes the whole path uncacheable: os.walk skips it silently by
+    default, and a signature of the partial listing would miss changes
+    under it."""
+    def _raise(err: OSError) -> None:
+        raise err
+
     try:
         if os.path.isdir(path):
             parts = []
-            for root, dirs, files in os.walk(path):
+            for root, dirs, files in os.walk(path, onerror=_raise):
                 dirs.sort()
                 for name in files:
                     st = os.stat(os.path.join(root, name))

@@ -61,6 +61,14 @@ def get_spark(app_name: str = "dozer_spark", *, extra_conf: dict | None = None) 
         .config("spark.sql.shuffle.partitions", _shuffle_partitions(cpus))
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # compiled whole-stage classes are an LRU cache; at Spark's
+        # default of 100 one benchmark batch pass (103 distinct classes)
+        # or one durable aggregation epoch (131) evicts every class
+        # before its next use, so each pass recompiles all of them.
+        # 512 is over twice one batch pass plus one epoch (223,
+        # tools/codegen_working_set.py). A static conf: it only takes
+        # effect when set before the session starts.
+        .config("spark.sql.codegen.cache.maxEntries", "512")
         # Arrow for any pandas-UDF path (10-100x over row-at-a-time python)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

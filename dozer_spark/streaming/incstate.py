@@ -22,9 +22,12 @@ work must be O(batch), not O(state).
 - **every `compact_every` epochs**: the pending deltas are reduced
   (latest image per digest wins) and MERGEd into the bucketed base
   table — two jobs, touched buckets only, amortized across the window;
-- **reads** reconstruct the live state as base ⊕ pending deltas (an
-  anti-join + union per pending delta; the chain is bounded by
-  `compact_every`, so plans stay flat across epochs).
+- **reads** reconstruct the live state as base ⊕ pending deltas in ONE
+  reduction, whatever the pending depth: the pending deltas are read
+  as one epoch-stamped scan, and one anti-join against the keys of the
+  non-fresh deltas drops every row a LATER non-fresh delta mentions
+  (latest epoch per key wins; tombstones drop out). A read's plan and
+  job count are the same at every depth.
 
 Crash contract (the reference's epoch-commit semantics, dozer-core
 checkpoint.rs): the StateStore manifest commit is the epoch boundary;
@@ -144,8 +147,8 @@ class DiffStateTable:
         self._schema_json: str | None = None
         self._compacted_prev: list[int] = []
         # per-epoch fresh-keys flags (see advance): True = the delta is
-        # pure inserts whose keys exist nowhere else in the log, so
-        # reads may union it without the per-delta anti-join
+        # pure inserts whose keys exist nowhere else in the log, so its
+        # keys never enter the read's anti-join
         self._fresh: dict[int, bool] = {}
         # all-fresh windows compact via TransactionalTable.append_fresh
         # (O(window), no bucket rewrite); False forces the merge path
@@ -175,11 +178,12 @@ class DiffStateTable:
         (no `__del` rows) whose keys appear nowhere else in the log —
         true for every append-only streaming-index epoch, where new
         rows are keyed by digests over just-arrived ids that passed the
-        seen filter. Reads then union the delta WITHOUT the per-delta
-        anti-join (a shuffle of the accumulated state per pending
-        delta), which is what keeps bucket-pruned probe reads
-        shuffle-free. Epochs that tombstone or overwrite (TTL prunes,
-        re-sent-document rewrites) must leave it False."""
+        seen filter. Reads then never replace older rows by its keys,
+        and while no non-fresh delta follows it they union it with no
+        join at all, which is what keeps bucket-pruned probe reads of
+        append-only indexes shuffle-free. Epochs that tombstone or
+        overwrite (TTL prunes, re-sent-document rewrites) must leave it
+        False."""
         if self._schema_json is None:
             self._schema_json = changed.schema.json()
         if len(self._pending) >= self.compact_every:
@@ -229,8 +233,7 @@ class DiffStateTable:
         if (self.append_fresh_compaction and self._pending
                 and all(self._fresh.get(e, False) for e in self._pending)):
             rows = (
-                self._stacked_deltas(self._pending)
-                .drop("__e")
+                self._stacked_deltas(self._pending, stamp=False)
                 .filter(~F.col("__del")).drop("__del")
             )
             self.tx.append_fresh(rows, batch_id=epoch, app_id=app_id)
@@ -271,38 +274,67 @@ class DiffStateTable:
 
     # -- read path -----------------------------------------------------------
 
-    def _stacked_deltas(self, epochs: list[int]) -> DataFrame:
-        """All pending delta rows with their epoch stamp `__e`."""
-        schema = self._delta_schema()
-        out = None
-        for e in epochs:
-            d = self.spark.read.schema(schema).parquet(
-                self._delta_dir(e)
-            ).withColumn("__e", F.lit(e))
-            out = d if out is None else out.unionByName(d)
-        return out
+    def _stacked_deltas(self, epochs: list[int], keep: F.Column | None = None,
+                        stamp: bool = True) -> DataFrame:
+        """The given deltas' rows as ONE scan, each stamped with its
+        epoch `__e` (parsed from the file's delta dir) unless
+        stamp=False. A filter on `__e` prunes whole delta files at
+        listing time. keep: a row filter."""
+        d = self.spark.read.schema(self._delta_schema()).parquet(
+            *[self._delta_dir(e) for e in epochs])
+        if stamp:
+            d = d.withColumn("__e", F.regexp_extract(
+                F.col("_metadata.file_path"), r"/e(\d+)/[^/]*$", 1
+            ).cast("int"))
+        return d if keep is None else d.filter(keep)
 
-    def _apply_deltas(self, base: DataFrame | None,
-                      epochs: list[int]) -> DataFrame | None:
-        """base ⊕ deltas, in epoch order: each delta's digests replace
-        the base's rows; `__del` rows drop out. Fresh-keys deltas (see
-        advance) union directly — no anti-join, no shuffle."""
+    def _apply_deltas(self, base: DataFrame | None, epochs: list[int],
+                      keep: F.Column | None = None) -> DataFrame | None:
+        """base ⊕ deltas as one reduction: a row of the base or of delta
+        e survives unless a non-fresh delta of a LATER epoch mentions
+        its key (a row or a tombstone); `__del` rows never survive.
+        That is exactly the per-delta replay (each delta's keys replace
+        everything older, its upserts join the state), done with one
+        anti-join of the base against the non-fresh deltas' keys and
+        one epoch-stamped anti-join of the older deltas against them,
+        so a read's plan and job count stay the same at every pending
+        depth. advance appends epochs in ascending order, so a later
+        epoch is a later delta of the log.
+
+        The last non-fresh delta and the fresh-keys deltas after it
+        (see advance) have no later replacer and union with no join, so
+        a lone delta reads shuffle-free. Every branch filters the SAME
+        scan: a plan must reach each delta dir through one file index,
+        because an overwrite of the dir (a replayed epoch) refreshes
+        only the first index a cached plan holds for it. keep: a row
+        filter applied to every delta (the bucket restriction of
+        read_live_pruned)."""
         if not epochs:
             return base
-        for e in epochs:
-            d = self.spark.read.schema(self._delta_schema()).parquet(
-                self._delta_dir(e)
-            )
-            upserts = d.filter(~F.col("__del")).drop("__del")
-            if base is None:
-                base = upserts
-            elif self._fresh.get(e, False):
-                base = base.unionByName(upserts)
-            else:
-                base = base.join(
-                    d.select(*self.key_cols), self.key_cols, "left_anti"
-                ).unionByName(upserts)
-        return base
+        nonfresh = [e for e in epochs if not self._fresh.get(e, False)]
+        older = [e for e in epochs if nonfresh and e < nonfresh[-1]]
+        join = bool(nonfresh) and (base is not None or bool(older))
+        deltas = self._stacked_deltas(epochs, keep, stamp=join)
+        rows = deltas.filter(~F.col("__del")).drop("__del")
+        if join:
+            keys = (deltas if len(nonfresh) == len(epochs)
+                    else deltas.filter(F.col("__e").isin(*nonfresh)))
+            keys = keys.select(*[F.col(k).alias(f"__k{j}")
+                                 for j, k in enumerate(self.key_cols)],
+                               F.col("__e").alias("__ke"))
+            same = [F.col(k) == F.col(f"__k{j}")
+                    for j, k in enumerate(self.key_cols)]
+            if base is not None:
+                base = base.join(keys.drop("__ke"), same, "left_anti")
+            if older:
+                later = F.col("__ke") > F.col("__e")
+                for c in same:
+                    later = later & c
+                rows = rows.filter(F.col("__e") >= nonfresh[-1]).unionByName(
+                    rows.filter(F.col("__e") < nonfresh[-1])
+                    .join(keys, later, "left_anti"))
+            rows = rows.drop("__e")
+        return rows if base is None else base.unionByName(rows)
 
     def _strip(self, df: DataFrame) -> DataFrame:
         # synthetic digest keys are internal: operators recompute them
@@ -340,30 +372,15 @@ class DiffStateTable:
         matching bucket dirs plus the pending deltas filtered by the
         same bucket hash. Because bucket_cols are functionally
         determined by key_cols (the constructor contract), restricting
-        BOTH sides of the per-delta anti-join to the same bucket set
-        yields exactly read_live().where(bucket in bucket_ids) — every
-        possible equality match on the bucket columns is present."""
+        the base, the delta rows AND the delta keys of the reduction to
+        the same bucket set yields exactly
+        read_live().where(bucket in bucket_ids) — every key that could
+        replace a kept row lives in a kept bucket."""
         base = (self.tx.read_buckets(bucket_ids)
                 if self.tx.version > 0 else None)
-        if not self._pending:
-            out = base
-        else:
-            ids = set(bucket_ids)
-            out = base
-            for e in self._pending:
-                d = self.spark.read.schema(self._delta_schema()).parquet(
-                    self._delta_dir(e)
-                ).filter(self.tx._bucket_col().isin(*ids) if ids
-                         else F.lit(False))
-                upserts = d.filter(~F.col("__del")).drop("__del")
-                if out is None:
-                    out = upserts
-                elif self._fresh.get(e, False):
-                    out = out.unionByName(upserts)
-                else:
-                    out = out.join(
-                        d.select(*self.key_cols), self.key_cols, "left_anti"
-                    ).unionByName(upserts)
+        ids = set(bucket_ids)
+        keep = self.tx._bucket_col().isin(*ids) if ids else F.lit(False)
+        out = self._apply_deltas(base, self._pending, keep)
         if out is None:
             raise ValueError("no state advanced yet")
         return self._strip(out)
@@ -388,9 +405,9 @@ class DiffStateTable:
             # HEAD — which already CONTAINS the compacted pending
             # epochs' rows — so a fresh-keys union would duplicate every
             # row of those epochs (double dedup pairs, doubled BM25
-            # tf/df). Drop the flags: the per-delta anti-join
-            # re-application is idempotent over the ahead base (each
-            # key's rows are replaced by the same latest image).
+            # tf/df). Drop the flags: re-applying the deltas through the
+            # anti-join is idempotent over the ahead base (each key's
+            # rows are replaced by the same latest image).
             self._fresh = {e: False for e in self._fresh}
         # delta dirs on disk that are NOT in the committed pending list
         # were compacted (or orphaned) before the restart — schedule them

@@ -198,10 +198,10 @@ class RetractingAggregation:
         self._snapshot = merged
 
         # 3. recompute aggregates for dirty groups only. Lazy cache, not
-        # an eager checkpoint: the frame is consumed by the diff AND the
-        # state advance below — the cache deduplicates the recompute, and
-        # the state advance's own _ckpt breaks lineage for the next
-        # batch, so an extra materialization job here buys nothing
+        # an eager checkpoint: the store-less path consumes the frame in
+        # the diff AND its state advance — the cache deduplicates the
+        # recompute, and that advance's own _ckpt breaks lineage for the
+        # next batch, so an extra materialization job here buys nothing
         new_agg = self._agg_for(merged, dirty).cache()
 
         # 4. diff vs previous state for those groups -> I/U/D changelog
@@ -238,16 +238,19 @@ class RetractingAggregation:
             .withColumn("__img", image)
             .withColumn("__kimg", keys_img)
         )
-        out = diffed.select(
-            "__op",
+        # ONE execution of the diff feeds both the output changelog and
+        # the durable state advance. Even a lazy localCheckpoint runs
+        # every shuffle stage of an AQE plan when it is created (AQE
+        # executes the plan up to its result stage); the first consumer
+        # then computes and pins the result stage and later consumers
+        # read the pinned blocks. Deriving the agg delta from `diffed`
+        # instead would plan and run the whole diff a second time.
+        diff = diffed.select(
+            "__op", "__gk",
             *[F.col(f"__kimg.{c}").alias(c) for c in self.group_by],
             *[F.col(f"__img.{c}").alias(c) for c in agg_cols],
-        )
-        # the output changelog stays LAZY: its whole lineage is pinned
-        # frames (the staged snapshot, the cached new_agg, the previous
-        # state's checkpoint), so collecting it later is safe and batches
-        # that discard their output changelog pay nothing for it
-        out = out.localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False)
+        out = diff.drop("__gk")
 
         # 5. advance aggregate state
         if self._store is not None:
@@ -255,10 +258,8 @@ class RetractingAggregation:
             # the digest-keyed DiffStateTable — O(dirty) write IO per
             # epoch instead of a full aggregate-table rewrite. D rows
             # delete their digest; I/U upsert the new image.
-            changed = diffed.select(
-                "__gk",
-                *[F.col(f"__kimg.{c}").alias(c) for c in self.group_by],
-                *[F.col(f"__img.{c}").alias(c) for c in agg_cols],
+            changed = diff.select(
+                "__gk", *self.group_by, *agg_cols,
                 (F.col("__op") == "D").alias("__del"),
             )
             meta = self._aggtx.advance(changed, epoch=self._store.epoch + 1,

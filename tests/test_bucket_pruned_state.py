@@ -177,6 +177,9 @@ def test_diffstate_fresh_keys_union_path(spark, tmp_path):
         metas.append(sa.advance(rows(e, range(6)), epoch=e, app_id="t",
                                 fresh_keys=True))
         sb.advance(rows(e, range(6)), epoch=e, app_id="t")
+    # an all-fresh window reads as a pure union: no anti-join at all
+    plan = sa.read_live()._jdf.queryExecution().analyzed().toString()
+    assert "LeftAnti" not in plan
     # epoch 3 deletes one epoch-1 digest -> must NOT be marked fresh
     dels = spark.createDataFrame(
         [("dg1_2", "key2", 12, True)], ["dg", "k", "v", "__del"])
@@ -187,13 +190,13 @@ def test_diffstate_fresh_keys_union_path(spark, tmp_path):
     bids = sa.bucket_ids_for_values([["key2"], ["key7"]])
     assert _rows(sa.read_live_pruned(bids)) == _rows(
         sb.read_live_pruned(bids))
-    # the union fast path really is anti-join-free for the fresh window
-    # (analyzed plan = construction shape; the optimizer may later
-    # distribute the one remaining anti-join through the union)
+    # the read is one reduction: a single anti-join of the older deltas
+    # against the later non-fresh keys, whatever the depth (analyzed
+    # plan = construction shape)
     plan = sa.read_live()._jdf.queryExecution().analyzed().toString()
-    assert plan.count("Join LeftAnti") == 1  # only the delete epoch
+    assert plan.count("Join LeftAnti") == 1
     plain = sb.read_live()._jdf.queryExecution().analyzed().toString()
-    assert plain.count("Join LeftAnti") == 2  # every non-first epoch
+    assert plain.count("Join LeftAnti") == 1
 
     # resume: flags restored from the committed meta
     store = StateStore(spark, str(tmp_path / "store"))
