@@ -19,7 +19,8 @@ Layout:
     functions/    scalar function library (dozer dialect shims)
     operators/    relational operators (window/ttl/join/agg/set)
     plans/        SQL dialect -> DataFrame translation (TUMBLE/HOP/TTL/INTO)
-    streaming/    changelog semantics, foreachBatch merge sinks
+    streaming/    changelog semantics, retracting operators, durable state
+    storage/      TransactionalTable: the MERGE-by-PK sink + change feed
     ops/          large-scale pipeline ops: dedup, similarity, text, multimodal
 """
 

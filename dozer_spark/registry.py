@@ -50,17 +50,28 @@ TESTDATA_PKS: dict[str, list[str]] = {
 # every query still computes from the parquet bytes; this is the same
 # class of caching as Spark's own session file-listing cache (guide §6).
 _SCHEMA_CACHE: dict[tuple, tuple] = {}
-# (applicationId, path, sig) -> (DataFrame, ns_cols): the fully-built
-# reader frame. METADATA ONLY — a DataFrame is an immutable logical
-# plan, never data or results; every action over it still scans the
-# parquet. Keyed on the file signature (stale mtime -> rebuild) and the
-# Spark application (a restarted session never sees another session's
-# JVM handles). Saves the ~35 ms reader construction + ns-normalization
-# py4j round-trips PER TABLE PER BUILD (guide §7.3) on top of the
-# schema memo; the returned plan is bit-identical to a fresh build, so
-# CacheManager plan-equality (persisted intermediates across bench
-# passes) is unaffected.
-_READER_CACHE: dict[tuple, tuple] = {}
+# Reader memo, path -> (sig, DataFrame, ns_cols): the fully-built reader
+# frame. METADATA ONLY — a DataFrame is an immutable logical plan, never
+# data or results; every action over it still scans the parquet. Saves
+# the ~35 ms reader construction + ns-normalization py4j round-trips PER
+# TABLE PER BUILD (guide §7.3) on top of the schema memo; the returned
+# plan is bit-identical to a fresh build, so CacheManager plan-equality
+# (persisted intermediates across bench passes) is unaffected.
+# Held ON the session object: a frame is bound to the session that built
+# it (a newSession() sibling shares the application but must get its own
+# frames), and a frame refers back to its session, so a module-level
+# weak-keyed map would never drop an entry — on the session, the memo
+# lives exactly as long as the session does. One entry per path: a
+# rewritten file (new signature) replaces the stale frame.
+_READER_MEMO = "_dozer_reader_memo"
+
+
+def _reader_memo(spark: SparkSession) -> dict:
+    memo = getattr(spark, _READER_MEMO, None)
+    if memo is None:
+        memo = {}
+        setattr(spark, _READER_MEMO, memo)
+    return memo
 
 
 def _path_sig(path: str) -> tuple | None:
@@ -235,13 +246,10 @@ def load_parquet(spark: SparkSession, path: str, name: str | None = None) -> Dat
     (`spark.read.schema(...)` instead of `spark.read.parquet`'s
     inference pass — ~3x less driver time per open)."""
     sig = _path_sig(path)
-    try:
-        app = spark.sparkContext.applicationId
-    except Exception:
-        app = None
-    rkey = (app, path, sig) if (app is not None and sig is not None) else None
-    if rkey is not None and rkey in _READER_CACHE:
-        df, ns_cols = _READER_CACHE[rkey]
+    memo = _reader_memo(spark)
+    cached = memo.get(path)
+    if sig is not None and cached is not None and cached[0] == sig:
+        _, df, ns_cols = cached
         if ns_cols:
             # the legacy conf must hold at SCAN time on every build
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -275,8 +283,10 @@ def load_parquet(spark: SparkSession, path: str, name: str | None = None) -> Dat
             df = df.withColumn(
                 c, F.timestamp_micros(F.expr(f"`{c}` div 1000")).cast("timestamp_ntz")
             )
-    if rkey is not None:
-        _READER_CACHE[rkey] = (df, ns_cols)
+    if sig is not None:
+        memo[path] = (sig, df, ns_cols)
+    else:
+        memo.pop(path, None)
     return df
 
 

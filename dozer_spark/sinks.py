@@ -10,7 +10,7 @@ Mapping:
 - ClickHouse      -> NATIVE HTTP sink (sinks_clickhouse.py: executor-side
                      JSONEachRow inserts, dedup-token epochs) or this
                      JDBC writer config when a driver jar is present
-- any upsert sink -> streaming/merge.py foreachBatch MERGE by PK
+- any upsert sink -> storage/txtable.py foreach_batch_merge (MERGE by PK)
 - epoch commit    -> micro-batch + checkpointLocation (built-in)
 - batch files     -> parquet/csv/json writers with partitioning control
 

@@ -5,10 +5,11 @@
   bounds how long a key is remembered). This is the streaming face of
   ops/dedup.exact_dedup.
 - For near-dup (MinHash/SimHash) on streams, compute signatures per
-  micro-batch (stateless, ops/dedup.minhash_signatures) and MERGE into a
-  signature store keyed by band (foreachBatch + upsert_parquet); new
-  docs probe the store for collisions. The signature computation is the
-  same code path batch and streaming — only the store differs.
+  micro-batch (stateless, ops/dedup.minhash_signatures) and append them
+  to a signature store bucketed by band (a delta-log DiffStateTable when
+  durable, see incstate.py); new docs probe the store for collisions.
+  The signature computation is the same code path batch and streaming —
+  only the store differs.
 """
 
 from __future__ import annotations

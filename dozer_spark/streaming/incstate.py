@@ -70,30 +70,13 @@ def rewind_to_version(tx: TransactionalTable, cur: DataFrame,
                       committed_version: int,
                       key_cols: list[str]) -> DataFrame | None:
     """State AS OF committed_version (None when <= 0: nothing was
-    committed). The inverse-CDF loop itself lives in storage/txtable.py
-    (inverse_rewind), shared with the public time-travel read.
-
-    Same vacuumed-feed guard as read_as_of: TransactionalTable.
-    read_changes silently SKIPS missing version dirs, so a rewind over
-    a vacuumed window would reconstruct a state that never existed.
-    DiffStateTable never sets change_retention, so this never fires
-    there — the check makes the invariant enforced, not incidental."""
+    committed). The inverse-CDF loop and its vacuumed-feed guard live in
+    storage/txtable.py (inverse_rewind), shared with the public
+    time-travel read. DiffStateTable never sets change_retention, so the
+    guard never fires there — it makes the invariant enforced, not
+    incidental."""
     if committed_version <= 0:
         return None
-    cd = os.path.join(tx.path, "changes")
-    have = (
-        {int(v[1:]) for v in os.listdir(cd) if v.startswith("v")}
-        if os.path.isdir(cd) else set()
-    )
-    missing = sorted(
-        set(range(committed_version + 1, tx.version + 1)) - have
-    )
-    if missing:
-        raise ValueError(
-            f"cannot rewind to v{committed_version}: change feed for "
-            f"versions {missing} was vacuumed — resume would "
-            "reconstruct a state that never existed"
-        )
     return inverse_rewind(tx, cur, committed_version, key_cols)
 
 
@@ -148,12 +131,9 @@ class DiffStateTable:
         self._compacted_prev: list[int] = []
         # per-epoch fresh-keys flags (see advance): True = the delta is
         # pure inserts whose keys exist nowhere else in the log, so its
-        # keys never enter the read's anti-join
+        # keys never enter the read's anti-join, and an all-fresh window
+        # compacts via TransactionalTable.append_fresh
         self._fresh: dict[int, bool] = {}
-        # all-fresh windows compact via TransactionalTable.append_fresh
-        # (O(window), no bucket rewrite); False forces the merge path
-        # everywhere (the A/B lever for scale evidence runs)
-        self.append_fresh_compaction = True
 
     # -- paths ---------------------------------------------------------------
 
@@ -230,40 +210,35 @@ class DiffStateTable:
         append-only streaming indexes — the merge path rewrites every
         bucket a uniform window touches, i.e. the WHOLE accumulated
         state, every compact_every epochs."""
-        if (self.append_fresh_compaction and self._pending
-                and all(self._fresh.get(e, False) for e in self._pending)):
+        if self._pending and all(self._fresh.get(e, False)
+                                 for e in self._pending):
             rows = (
                 self._stacked_deltas(self._pending, stamp=False)
                 .filter(~F.col("__del")).drop("__del")
             )
             self.tx.append_fresh(rows, batch_id=epoch, app_id=app_id)
-            for e in self._compacted_prev:
-                shutil.rmtree(self._delta_dir(e), ignore_errors=True)
-            self._compacted_prev = list(self._pending)
-            self._pending = []
-            self._fresh = {}
-            return
-        stacked = self._stacked_deltas(self._pending)
-        w = Window.partitionBy(*self.key_cols).orderBy(
-            F.desc("__e"), F.asc("__del"))
-        latest = (
-            stacked.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__e")
-        )
-        if self.bucket_cols != self.key_cols:
-            tombs = (
-                stacked.filter(F.col("__del")).drop("__e")
-                .dropDuplicates(self.key_cols + self.bucket_cols)
-            )
-            reduced = latest.unionByName(tombs).dropDuplicates(
-                self.key_cols + self.bucket_cols + ["__del"])
         else:
-            # key-bucketed state: a tombstone can only live in the
-            # key's own bucket, which the latest image already touches
-            reduced = latest
-        self.tx.merge(reduced, delete_col="__del", batch_id=epoch,
-                      app_id=app_id)
+            stacked = self._stacked_deltas(self._pending)
+            w = Window.partitionBy(*self.key_cols).orderBy(
+                F.desc("__e"), F.asc("__del"))
+            latest = (
+                stacked.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") == 1)
+                .drop("__rn", "__e")
+            )
+            if self.bucket_cols != self.key_cols:
+                tombs = (
+                    stacked.filter(F.col("__del")).drop("__e")
+                    .dropDuplicates(self.key_cols + self.bucket_cols)
+                )
+                reduced = latest.unionByName(tombs).dropDuplicates(
+                    self.key_cols + self.bucket_cols + ["__del"])
+            else:
+                # key-bucketed state: a tombstone can only live in the
+                # key's own bucket, which the latest image already touches
+                reduced = latest
+            self.tx.merge(reduced, delete_col="__del", batch_id=epoch,
+                          app_id=app_id)
         # previous window's dirs leave retention only NOW — one full
         # cycle after they were compacted (lazy readers; see module doc)
         for e in self._compacted_prev:

@@ -107,19 +107,20 @@ def test_append_fresh_cdf_time_travel_and_batch_id(spark, tmp_path):
     assert t.version == v and t.read().count() == 3
 
 
-def _mk(spark, path, append_mode=True, compact_every=2):
-    st = DiffStateTable(spark, path, key_cols=["dg"], internal_key=True,
-                        bucket_cols=["k"], n_buckets=8,
-                        compact_every=compact_every)
-    st.append_fresh_compaction = append_mode
-    return st
+def _mk(spark, path, compact_every=2):
+    return DiffStateTable(spark, path, key_cols=["dg"], internal_key=True,
+                          bucket_cols=["k"], n_buckets=8,
+                          compact_every=compact_every)
 
 
-def _adv_fresh(spark, st, e, n=6):
+def _adv_fresh(spark, st, e, n=6, fresh_keys=True):
+    """Advance epoch e with n new keys. fresh_keys=False advances the
+    same rows without the fresh assertion, so the window compacts
+    through merge — the reference path for the append path."""
     delta = spark.createDataFrame(
         [(f"dg{e}_{i}", f"key{i}", e * 10 + i) for i in range(n)],
         ["dg", "k", "v"]).withColumn("__del", F.lit(False))
-    st.advance(delta, epoch=e, app_id="t", fresh_keys=True)
+    st.advance(delta, epoch=e, app_id="t", fresh_keys=fresh_keys)
 
 
 def test_all_fresh_window_compacts_via_append(spark, tmp_path):
@@ -127,11 +128,11 @@ def test_all_fresh_window_compacts_via_append(spark, tmp_path):
     path, across two compaction windows, and the append path actually
     ran (version advanced without the merge's key-window reduction —
     witnessed by the base containing the rows and read_live matching)."""
-    a = _mk(spark, str(tmp_path / "a"), append_mode=True)
-    m = _mk(spark, str(tmp_path / "m"), append_mode=False)
+    a = _mk(spark, str(tmp_path / "a"))
+    m = _mk(spark, str(tmp_path / "m"))
     for e in range(1, 6):  # compactions fire at epochs 3 and 5
         _adv_fresh(spark, a, e)
-        _adv_fresh(spark, m, e)
+        _adv_fresh(spark, m, e, fresh_keys=False)
     assert a.tx.version == m.tx.version == 2
     assert _rows(a.read_live()) == _rows(m.read_live())
     bids = a.bucket_ids_for_values([["key1"], ["key4"]])

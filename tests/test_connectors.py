@@ -382,8 +382,12 @@ def test_concurrent_writer_detected(spark, tmp_path):
     a.merge(spark.createDataFrame([(1, "a")], ["id", "v"]))
     b = TransactionalTable(spark, p, pk=["id"])
     a.merge(spark.createDataFrame([(2, "b")], ["id", "v"]))  # a is now v2
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
     with pytest.raises(ConcurrentWriteError, match="another writer"):
         b.merge(spark.createDataFrame([(3, "c")], ["id", "v"]))
+    # the failed merge released the frames it persisted: nothing stays
+    # cached in the shared session
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
 
 
 @pytest.mark.skipif(

@@ -28,7 +28,22 @@ def docs(spark):
     d.unpersist()
 
 
+# A cap of 2 forces the fragmented hot-bucket regime: every bucket of
+# more than 2 docs is split into replicated fragments, where one pair
+# can meet in several fragment pairs. The DISTINCT that used to hide
+# such a duplicate is gone, so that path is pinned row for row too.
+FRAGMENTED_CAP = 2
+
+
 def test_minhash_pairs_first_band_filter_equals_distinct_form(spark, docs):
+    _check_minhash_pairs_equal_distinct_form(docs, cap=4096)
+
+
+def test_minhash_pairs_fragmented_hot_bands_equal_distinct_form(spark, docs):
+    _check_minhash_pairs_equal_distinct_form(docs, cap=FRAGMENTED_CAP)
+
+
+def _check_minhash_pairs_equal_distinct_form(docs, cap):
     """minhash_lsh_pairs (distinct=False + first-matching-band filter +
     |AuB| = |A|+|B|-|AnB|) must equal the r12 form: pair-level DISTINCT
     then an array_union-based verify. Same threshold/geometry as the
@@ -43,7 +58,8 @@ def test_minhash_pairs_first_band_filter_equals_distinct_form(spark, docs):
     )
 
     threshold = 0.9
-    got = minhash_lsh_pairs(docs, "text", "doc_id", threshold=threshold)
+    got = minhash_lsh_pairs(docs, "text", "doc_id", threshold=threshold,
+                            hot_band_cap=cap)
 
     n_hashes, n_bands = minhash_geometry(threshold, None, None)
     sigs = minhash_signatures(docs, "text", "doc_id", n_hashes).drop("toks")
@@ -52,7 +68,7 @@ def test_minhash_pairs_first_band_filter_equals_distinct_form(spark, docs):
         bands,
         ["band", "band_key"],
         "doc_id",
-        hot_cap=4096,
+        hot_cap=cap,
         extra_pred=minhash_size_pred(threshold),
     )  # distinct=True default: the r12 shape
     side_a = sigs.select(
@@ -81,6 +97,14 @@ def test_minhash_pairs_first_band_filter_equals_distinct_form(spark, docs):
 
 
 def test_simhash_pairs_first_chunk_filter_equals_distinct_form(spark, docs):
+    _check_simhash_pairs_equal_distinct_form(docs, cap=4096)
+
+
+def test_simhash_pairs_fragmented_hot_chunks_equal_distinct_form(spark, docs):
+    _check_simhash_pairs_equal_distinct_form(docs, cap=FRAGMENTED_CAP)
+
+
+def _check_simhash_pairs_equal_distinct_form(docs, cap):
     """simhash_pairs (distinct=False + first-matching-chunk filter) must
     equal the r12 form (pair-level DISTINCT), row for row."""
     from dozer_spark.ops.dedup import (
@@ -91,7 +115,8 @@ def test_simhash_pairs_first_chunk_filter_equals_distinct_form(spark, docs):
     )
 
     max_hamming, n_bits = 3, 60
-    got = simhash_pairs(docs, "text", "doc_id", max_hamming, n_bits)
+    got = simhash_pairs(docs, "text", "doc_id", max_hamming, n_bits,
+                        hot_chunk_cap=cap)
 
     sigs = simhash(docs, "text", "doc_id", n_bits)
     chunks = simhash_chunk_table(sigs, "doc_id", n_bits, max_hamming)
@@ -100,7 +125,7 @@ def test_simhash_pairs_first_chunk_filter_equals_distinct_form(spark, docs):
             chunks,
             ["chunk", "chunk_val"],
             "doc_id",
-            hot_cap=4096,
+            hot_cap=cap,
             carry=(("sig_a", "sig_b", "simhash"),),
         )  # distinct=True default: the r12 shape
         .withColumn(
@@ -214,6 +239,40 @@ def test_reader_memo_invalidates_on_rewrite(spark, tmp_path):
     # parquet dir rewrite changes file names/mtimes -> new signature
     df2 = load_parquet(spark, p)
     assert df2.count() == 9, "reader memo served a stale frame"
+
+
+def test_reader_memo_is_per_session(spark, tmp_path):
+    """A memoized reader frame is bound to the session that built it: a
+    newSession() sibling (same application) must get its own frame, not
+    one whose views and confs land in the other session."""
+    from dozer_spark.registry import load_parquet
+
+    p = str(tmp_path / "t.parquet")
+    spark.range(3).toDF("x").write.mode("overwrite").parquet(p)
+    sibling = spark.newSession()
+    df_a = load_parquet(spark, p)
+    df_b = load_parquet(sibling, p)
+    assert df_a.sparkSession is spark
+    assert df_b.sparkSession is sibling
+    assert load_parquet(sibling, p) is df_b  # the sibling's own memo hit
+
+
+def test_reader_memo_keeps_one_signature_per_path(spark, tmp_path):
+    """Rewriting a file replaces its memo entry instead of adding one
+    per signature, so the memo does not grow with every rewrite."""
+    import time
+
+    from dozer_spark.registry import _reader_memo, load_parquet
+
+    p = str(tmp_path / "t.parquet")
+    sizes = []
+    for n in (4, 7):
+        time.sleep(0.01)
+        spark.range(n).toDF("x").write.mode("overwrite").parquet(p)
+        assert load_parquet(spark, p).count() == n
+        sizes.append(len(_reader_memo(spark)))
+    assert sizes[1] == sizes[0]  # the rewrite replaced the entry
+    assert _reader_memo(spark)[p][1].count() == 7
 
 
 def test_minhash_sigs_cache_survives_sql_templates(spark, docs):

@@ -13,11 +13,10 @@ from dozer_spark.streaming import (
     with_op,
     apply_changelog,
     changelog_filter,
-    upsert_parquet,
-    foreach_batch_upsert,
     streaming_tumble_agg,
     RetractingAggregation,
 )
+from dozer_spark.storage.txtable import TransactionalTable, foreach_batch_merge
 
 
 def _cl(spark, rows):
@@ -66,21 +65,6 @@ def test_changelog_filter_update_flip(spark):
         ("U", 1, 80.0),
         ("D", 1, 80.0),
     ]
-
-
-def test_upsert_parquet_roundtrip(spark, tmp_path):
-    path = str(tmp_path / "target")
-    b1 = spark.createDataFrame([(1, "x"), (2, "y")], ["id", "v"])
-    upsert_parquet(spark, b1, path, ["id"])
-    b2 = spark.createDataFrame([(2, "y2"), (3, "z")], ["id", "v"])
-    upsert_parquet(spark, b2, path, ["id"])
-    got = {r.id: r.v for r in spark.read.parquet(path).collect()}
-    assert got == {1: "x", 2: "y2", 3: "z"}
-    # delete handling
-    b3 = spark.createDataFrame([(1, "x", True), (4, "w", False)], ["id", "v", "is_del"])
-    upsert_parquet(spark, b3, path, ["id"], delete_col="is_del")
-    got = {r.id: r.v for r in spark.read.parquet(path).collect()}
-    assert got == {2: "y2", 3: "z", 4: "w"}
 
 
 class TestRetractingAggregation:
@@ -173,14 +157,15 @@ def test_streaming_file_source_tumble_to_upsert(spark, tmp_path):
     )
     q = (
         agg.writeStream.outputMode("update")
-        .foreachBatch(foreach_batch_upsert(out, ["window_start", "event_type"]))
+        .foreachBatch(foreach_batch_merge(out, ["window_start", "event_type"]))
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
+    table = TransactionalTable(spark, out, ["window_start", "event_type"])
     got = {(r.window_start.isoformat(), r.event_type): (r.n, r.sv)
-           for r in spark.read.parquet(out).collect()}
+           for r in table.read().collect()}
     assert got == {
         ("2024-01-01T00:00:00", "click"): (2, 3.0),
         ("2024-01-01T01:00:00", "view"): (1, 3.0),

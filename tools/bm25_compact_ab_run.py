@@ -1,16 +1,20 @@
-"""BM25 compaction A/B (round 12): the append_fresh fast path on a
+"""BM25 compaction run (round 12): the append_fresh fast path on a
 SECOND index family at corpus scale. StreamingBm25Index's postings
 state is the biggest streaming state in the repo (~60 postings/doc);
 its ingest epochs are append-only (resend-free runs are all-fresh
-windows), so compaction now routes through append_fresh. Protocol:
-ingest the corpus in equal epochs with compact_every=2 (compactions
-fire INSIDE epochs 3, 5, 7, ...), once with append compaction and once
-with the pre-r12 merge path forced, then probe three fixed queries.
-Per-epoch walls + probe result equality are the evidence.
+windows), so compaction routes through append_fresh. Protocol: ingest
+the corpus in equal epochs with compact_every=2 (compactions fire
+INSIDE epochs 3, 5, 7, ...), then probe three fixed queries. Per-epoch
+walls are the evidence.
+
+The round-12 run also forced the merge compaction path for an A/B
+(numbers in SCALING.md). That switch is gone — the fresh-keys flags
+alone decide the path; tools/compact_ab_run.py still times the two
+write shapes side by side on identical state.
 
 Usage: python tools/bm25_compact_ab_run.py [corpus_dir=.scratch/scale10]
            [--epochs 8] [--compact-every 2]
-Prints one JSON line per mode for SCALING.md / ARTIFACTS.
+Prints one JSON line for SCALING.md / ARTIFACTS.
 """
 
 from __future__ import annotations
@@ -29,14 +33,12 @@ from pyspark.sql import functions as F
 from dozer_spark import get_spark
 
 
-def run_mode(spark, docs, epochs, compact_every, append, root):
+def run_ingest(spark, docs, epochs, compact_every, root):
     from dozer_spark.ops.search import StreamingBm25Index
 
-    sd = os.path.join(root, "append" if append else "merge")
-    idx = StreamingBm25Index(spark, "text", "doc_id", state_dir=sd)
+    idx = StreamingBm25Index(spark, "text", "doc_id", state_dir=root)
     for t in (idx._tx_tf, idx._tx_docs):
         t.compact_every = compact_every
-        t.append_fresh_compaction = append
     times = []
     for i in range(epochs):
         part = docs.filter(F.pmod(F.xxhash64("doc_id"), epochs) == i)
@@ -51,12 +53,12 @@ def run_mode(spark, docs, epochs, compact_every, append, root):
                                        topn=10).collect()))
     probe_sec = round(time.perf_counter() - t0, 2)
     return {
-        "mode": "append" if append else "merge",
+        "mode": "append",
         "epochs": epochs, "compact_every": compact_every,
         "per_epoch_sec": times, "total_ingest_sec": round(sum(times), 2),
         "base_version": idx._tx_tf.tx.version,
         "probe_sec": probe_sec, "probe_rows": len(probe),
-    }, probe
+    }
 
 
 def main():
@@ -78,18 +80,10 @@ def main():
     n = docs.count()
     root = tempfile.mkdtemp(prefix="bm25ab_")
     try:
-        rec_a, probe_a = run_mode(spark, docs, epochs, compact_every,
-                                  True, root)
-        rec_a["corpus"] = corpus
-        rec_a["n_docs"] = n
-        print(json.dumps(rec_a), flush=True)
-        rec_m, probe_m = run_mode(spark, docs, epochs, compact_every,
-                                  False, root)
-        rec_m["corpus"] = corpus
-        rec_m["n_docs"] = n
-        print(json.dumps(rec_m), flush=True)
-        print(json.dumps({"probe_results_identical": probe_a == probe_m}),
-              flush=True)
+        rec = run_ingest(spark, docs, epochs, compact_every, root)
+        rec["corpus"] = corpus
+        rec["n_docs"] = n
+        print(json.dumps(rec), flush=True)
     finally:
         docs.unpersist()
         shutil.rmtree(root, ignore_errors=True)

@@ -17,15 +17,15 @@ end-to-end epoch:
 - pairs_total   : exactly-once regression constant (31,098 at 2M/4)
 
 Usage: python tools/bulk_ingest_profile.py [n_names] [--stages 4]
-           [--compact-every N] [--no-append] [--components]
+           [--compact-every N] [--components]
 Prints one JSON line per stage for SCALING.md / ARTIFACTS.
 
 --compact-every 2 --stages 8 makes compaction fire DURING bulk ingest
 (the default window of 8 never compacts in a 4-stage protocol — every
-published epoch wall before r12 silently excluded compaction).
---no-append forces the pre-r12 merge compaction for the A/B: merge
-rewrites every bucket a uniform window touches (the whole accumulated
-state), append_fresh writes O(window) and hardlinks the rest forward.
+published epoch wall before r12 silently excluded compaction). Bulk
+epochs are all-fresh, so they compact through append_fresh; the r12
+merge-compaction A/B numbers are in SCALING.md, and
+tools/compact_ab_run.py times both write shapes side by side.
 """
 
 from __future__ import annotations
@@ -46,7 +46,7 @@ from tools.wave9_scale_run import SCRATCH, gen_names
 
 
 def run_tier(spark, n: int, stages: int, compact_every: int = 8,
-             append: bool = True, components: bool = True) -> list[dict]:
+             components: bool = True) -> list[dict]:
     from dozer_spark.ops.dedup import _blocked_self_join_pairs
     from dozer_spark.ops.fuzzy import deletion_variants
     from dozer_spark.streaming.fuzzy import StreamingFuzzyIndex
@@ -65,7 +65,6 @@ def run_tier(spark, n: int, stages: int, compact_every: int = 8,
                                  state_dir=os.path.join(sd, "state"))
         for t in (fz._tx, fz._ids_tx):
             t.compact_every = compact_every
-            t.append_fresh_compaction = append
         pairs_total = 0
         for stage in range(stages):
             batch = names.filter(F.col("id") % stages == stage)
@@ -121,7 +120,6 @@ def run_tier(spark, n: int, stages: int, compact_every: int = 8,
                 "delta_write_sec": delta_write_sec,
                 "epoch_sec": epoch_sec,
                 "compact_every": compact_every,
-                "append_compaction": append,
                 "base_version": fz._tx.tx.version,
                 "pairs_total": pairs_total,
             })
@@ -151,11 +149,10 @@ def main():
         if a.startswith("--compact-every"):
             compact_every = int(a.split("=", 1)[1] if "=" in a
                                 else sys.argv[sys.argv.index(a) + 1])
-    append = "--no-append" not in sys.argv
     components = "--components" in sys.argv
     spark = get_spark("bulk_ingest_profile")
     spark.sparkContext.setLogLevel("ERROR")
-    run_tier(spark, n, stages, compact_every, append, components)
+    run_tier(spark, n, stages, compact_every, components)
 
 
 if __name__ == "__main__":
